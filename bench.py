@@ -20,7 +20,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import re
 import sys
 import time
 
@@ -53,16 +52,19 @@ HEADLINE = [
 ]
 
 
+# shuffle partitions are sized to the DATA (fixed across parallelism
+# levels), not to the core count: the scaling comparison must run the
+# identical work graph at both levels, differing only in how many tasks
+# execute concurrently. The frontier jobs' input, exchanges and snapshot
+# buckets all use this one count.
+PARTS = 64
+
+
 def build_spark(cpus: int, app: str) -> SparkSession:
-    # shuffle partitions are sized to the DATA (fixed across parallelism
-    # levels), not to the core count: the scaling comparison must run the
-    # identical work graph at both levels, differing only in how many
-    # tasks execute concurrently
-    parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "64"))
-    b = (
+    return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(parts))
+        .config("spark.sql.shuffle.partitions", str(PARTS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -80,34 +82,19 @@ def build_spark(cpus: int, app: str) -> SparkSession:
                 os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark_local"))
         .config("spark.ui.enabled", "false")
         # lz4 snapshots: measured vs snappy/zstd/uncompressed on the 21M
-        # row snapshot (scripts/exp_write_scaling.py) — fastest encode at
-        # BOTH parallelism levels and near-best size; uncompressed writes
-        # scale at 0.30 (tmpfs page traffic), compression is a scaling
-        # feature here, not just a size one
-        .config("spark.sql.parquet.compression.codec",
-                os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "lz4"))
+        # row snapshot — fastest encode at BOTH parallelism levels and
+        # near-best size; uncompressed writes scale at 0.30 (tmpfs page
+        # traffic), compression is a scaling feature here, not just a
+        # size one
+        .config("spark.sql.parquet.compression.codec", "lz4")
         # bucket-sorted snapshots are written with exactly one file per
         # bucket (pre-repartitioned on the bucket key), so the scan can
         # expose the per-bucket sort order and the politeness rank's
         # window runs sort-free (see snapshot_bucket_sorted)
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .getOrCreate()
     )
-    # GC experiments: the same total GC work runs inside a 4x shorter
-    # wall at the high level, so collector choice moves the scaling
-    # RATIO, not just the absolute times. Must be set before the JVM
-    # launches (getOrCreate), hence a builder conf, and only when asked
-    # for — an empty --conf value would trip spark-submit.
-    jopts = os.environ.get("SPARK_GRAFT_JAVA_OPTS")
-    if jopts:
-        b = b.config("spark.driver.extraJavaOptions", jopts)
-    # ad-hoc conf overrides for A/B experiments (event logs, AQE on/off,
-    # codegen...): "k=v;k2=v2" — experiments only, never load-bearing
-    extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for kv in filter(None, extra.split(";")):
-        k, _, v = kv.partition("=")
-        b = b.config(k.strip(), v.strip())
-    return b.getOrCreate()
 
 
 def force(df: DataFrame) -> None:
@@ -126,32 +113,6 @@ def cpu_probe() -> float:
 
 SNAP_DIR = os.environ.get("SPARK_GRAFT_SNAP_DIR", "/dev/shm/spark_graft_bench")
 
-# first_occurrence physical strategy for the frontier jobs: "window"
-# because a scheduling round's input frontier is unique-heavy (see
-# operators/dedup.py docstring) — the engine's own link-expansion dedup
-# keeps the "agg" default, where duplicates ARE collapsed map-side.
-DEDUP_STRATEGY = os.environ.get("SPARK_GRAFT_DEDUP_STRATEGY", "window")
-
-# round-snapshot layout:
-#  * "flat"       — plain parquet; the rank then exchanges + sorts.
-#  * "bucketed"   — BUCKETED BY (host, _salt), NO pre-shuffle: MEASURED
-#    WORSE (8M rows, local[16], clean probes): write 49.6 s vs flat
-#    8.9 s (64 map tasks × 256 buckets = 16k parquet writers), rank over
-#    the 16k-file scan 22.4 s vs 7.4 s adaptive-over-flat.
-#  * "bucketsort" — repartition(n, host, _salt) THEN bucketBy(n).sortBy
-#    (host, _salt, priority, seq): the same single payload exchange the
-#    rank used to do, moved BEFORE the write, yielding exactly ONE file
-#    per bucket (repartition and bucketBy share the Murmur3 pmod);
-#    the read-back scan then satisfies the rank's clustering AND
-#    ordering (legacy.bucketedTableScan.outputOrdering + single file per
-#    bucket), so rank_presalted runs with ZERO payload exchange, ZERO
-#    sort, and no driver stats barrier. Cluster analog: the Iceberg
-#    frontier snapshot bucket-sorted on (host-hash, seq-range).
-#    SHIPPED DEFAULT — clean-pair schedule job moved from eff ~0.59
-#    (flat) to 0.80: the layout turns the rank's exchange+sort+stats
-#    barrier into write-side work that scales with cores.
-SNAPSHOT_LAYOUT = os.environ.get("SPARK_GRAFT_SNAPSHOT_LAYOUT", "bucketsort")
-
 # where the frontier jobs compute the host column: "early" (at canon
 # time, before the dedup exchange) or "late" (after dedup + seen
 # anti-join, before the layout exchange that needs it). Host is a pure
@@ -159,164 +120,53 @@ SNAPSHOT_LAYOUT = os.environ.get("SPARK_GRAFT_SNAPSHOT_LAYOUT", "bucketsort")
 # shuffle width vs fixed stage cost. "late" keeps ~18B/row of host
 # strings out of the job's biggest shuffle and only extracts hosts for
 # surviving rows — it wins when shuffle bandwidth is the contended
-# resource (in-JVM alternating A/B, scripts/exp_host_late.py, 32M rows:
-# late/early median 0.91 over 8 pairs at c16, 0.96 at c4). But at the
-# driver's small shape (2M rows, local[32]) the shuffle is cheap and
-# late's extra projection stage dominates: early won all 3 interleaved
-# rounds, median 6.0 s vs 8.2 s (BENCH/driver_shape_ab.jsonl, r04).
-# Default "auto" picks by INPUT SIZE ONLY (never by core count): a
-# cluster job's physical plan must be a function of the data, not the
-# cluster size, or an N->4N scaling comparison compares two different
-# engines. Measured bracketing: early wins at 2M rows, late wins at 32M
-# (both c4 and c16); the 4M threshold keeps every scaling shape (6M
-# round / 32M schedule) on the measured late branch while the driver's
-# 2M shape gets early. Explicit "early"/"late" still force one branch.
-HOST_STAGE = os.environ.get("SPARK_GRAFT_HOST_STAGE", "auto")
-if HOST_STAGE not in ("early", "late", "auto"):
-    # a typo'd value would silently skip host extraction in BOTH branches
-    # and fail much later with an opaque unresolved-column error at
-    # presalt/snapshot time (ADVICE r03)
-    raise ValueError(
-        "SPARK_GRAFT_HOST_STAGE must be 'early', 'late' or 'auto', "
-        f"got {HOST_STAGE!r}")
-
-# total-rows crossover for HOST_STAGE="auto" (see bracketing above)
-HOST_AUTO_MAX_EARLY_ROWS = int(
-    os.environ.get("SPARK_GRAFT_HOST_AUTO_ROWS", str(4_000_000)))
+# resource (in-JVM alternating A/B, 32M rows: late/early median 0.91
+# over 8 pairs at c16, 0.96 at c4; BENCH/BASELINE.md shape decision 4).
+# But at the driver's small shape (2M rows, local[32]) the shuffle is
+# cheap and late's extra projection stage dominates: early won all 3
+# interleaved rounds, median 6.0 s vs 8.2 s (BENCH/NOTES_r04.md,
+# "Driver-shape schedule regression"). The stage is picked by INPUT
+# SIZE ONLY (never by core count): a cluster job's physical plan must be
+# a function of the data, not the cluster size, or an N->4N scaling
+# comparison compares two different engines. The 4M threshold keeps
+# every scaling shape (6M round / 32M schedule) on the measured late
+# branch while the driver's 2M shape gets early.
+HOST_EARLY_MAX_ROWS = 4_000_000
 
 
-def resolve_host_stage(n_rows: int, cpus: int) -> str:
-    """Resolve HOST_STAGE="auto" to early/late for a concrete job shape.
-
-    Deliberately ignores ``cpus``: the resolved plan must be identical
-    at every parallelism level so scaling-efficiency pairs compare the
-    same work graph."""
-    del cpus
-    if HOST_STAGE != "auto":
-        return HOST_STAGE
-    return "early" if n_rows <= HOST_AUTO_MAX_EARLY_ROWS else "late"
-
-# presalt width denominator: salt_width = max(2^14, n_rows // DENOM), so
-# DENOM bounds the salts-per-host the rank's offsets frame can carry
-# (offsets rows = hosts x n/salt_width). 64 won the pinned c4/c16 A/B at
-# 32M rows (exp_rank_variants2); env-gated so the driver's unpinned
-# local[32]/2M shape can A/B it too (r03 VERDICT item 2).
-SALT_DENOM = int(os.environ.get("SPARK_GRAFT_SALT_DENOM", "64"))
+def resolve_host_stage(n_rows: int) -> str:
+    """Host-extraction stage ("early" or "late") for ``n_rows`` rows."""
+    return "early" if n_rows <= HOST_EARLY_MAX_ROWS else "late"
 
 
-def snapshot(spark: SparkSession, df: DataFrame, name: str) -> DataFrame:
-    """Materialize a round snapshot as parquet on tmpfs and read it back —
-    exactly what the engine's SnapshotStore does per round, with RAM-backed
-    storage standing in for the cluster's distributed object store.
+# presalt width denominator: salt_width = max(2^14, n_rows // SALT_DENOM),
+# so SALT_DENOM bounds the salts-per-host the rank's offsets frame can
+# carry (offsets rows = hosts x n/salt_width); 64 won the pinned c4/c16
+# A/B at 32M rows (r03)
+SALT_DENOM = 64
 
-    Round 1 used ``.persist()+count()`` here; measured at local[16] that
-    columnar cache build costs 25.7 s where the parquet write costs 5.0 s
-    (vs 4.7 s for no materialization at all) — the cache build was the
-    single biggest scaling inversion in the whole bench."""
-    path = f"{SNAP_DIR}/{name}"
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+SNAPSHOT_SORT = ["host", "depth", "_salt", "discovery_seq"]
 
 
-def snapshot_bucketed(spark: SparkSession, df: DataFrame, name: str,
-                      buckets: int, cols: list[str]) -> DataFrame:
-    """Round snapshot written BUCKETED BY ``cols`` (parquet saveAsTable,
-    files on tmpfs) and read back as a bucketed scan: downstream
-    operators that need ClusteredDistribution on ``cols`` — the
-    presalted politeness rank's count aggregate and row_number window —
-    run with ZERO payload exchange. The write itself needs no shuffle
-    either (each map task buckets locally), so the rank's repartition
-    exchange is gone from the round, not merely moved into the write.
-    Cluster analog: the Iceberg frontier table bucketed on
-    (host-hash, seq-range)."""
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    (df.write.mode("overwrite").format("parquet")
-     .bucketBy(buckets, *cols)
-     .option("path", f"{SNAP_DIR}/{name}")
-     .saveAsTable(name))
-    return spark.table(name)
-
-
-def bucketize_files(path: str, buckets: int) -> None:
-    """Stamp plain-write part files with the bucket-id suffix Spark's
-    bucketed scan parses from filenames. Valid because the write was
-    pre-repartitioned on the bucket columns with the bucket count —
-    repartition's HashPartitioning and bucketBy's bucket id share the
-    same Murmur3 pmod, so partition i IS bucket i. Cluster analog:
-    Iceberg's bucket-transform metadata names the bucket in table
-    metadata rather than the filename. Raises unless every data file
-    matched and bucket ids are unique and < ``buckets`` (r03 VERDICT
-    item 4; same invariants as SnapshotStore._bucketize_files)."""
-    pat = re.compile(r"^part-(\d{5})-([0-9a-f\-]+)-c000(\..*)?\.parquet$")
-    seen_ids: set[int] = set()
-    for f in os.listdir(path):
-        m = pat.match(f)
-        if m:
-            bid = int(m.group(1))
-            if bid >= buckets or bid in seen_ids:
-                raise ValueError(
-                    f"bucketize: part file {f!r} violates the "
-                    f"one-file-per-bucket layout (id {bid}, count {buckets})")
-            seen_ids.add(bid)
-            ext = m.group(3) or ""
-            os.rename(
-                os.path.join(path, f),
-                os.path.join(path, f"part-{m.group(1)}-{m.group(2)}"
-                                   f"_{bid:05d}.c000{ext}.parquet"))
-        elif f.endswith(".crc"):   # orphaned RawLocalFileSystem checksums
-            os.remove(os.path.join(path, f))
-        elif f.endswith(".parquet"):
-            raise ValueError(
-                f"bucketize: data file {f!r} does not match the expected "
-                f"part-file naming — a bucketed scan would silently skip it")
-
-
-def snapshot_bucket_sorted(spark: SparkSession, df: DataFrame, name: str,
-                           buckets: int, cols: list[str],
-                           sort_cols: list[str]) -> DataFrame:
-    """Round snapshot whose LAYOUT does the rank's work: one payload
-    exchange (repartition on the bucket key — the very exchange the rank
+def snapshot_bucket_sorted(spark: SparkSession, df: DataFrame,
+                           name: str) -> DataFrame:
+    """Round snapshot whose LAYOUT does the rank's work, written and read
+    back by the engine's own ``SnapshotStore`` (tmpfs root): one payload
+    exchange (repartition on (host, _salt) — the very exchange the rank
     would otherwise run after the read) feeds a sorted write producing
-    exactly one file per bucket (repartition and bucketing share Murmur3
-    pmod, so each task holds one bucket). The read-back scan then
-    reports HashPartitioning(cols) AND per-bucket sort order, so
+    exactly one file per bucket. The read-back scan then reports
+    HashPartitioning(host, _salt) AND per-bucket sort order, so
     rank_presalted plans with no exchange, no sort, and no driver stats
-    barrier.
+    barrier. Bucket count: 256 dated from a separate rank SORT stage;
+    with the layout the sort is gone and 64 measured ~9% faster at c16,
+    neutral at c4 (in-JVM alternating A/B)."""
+    from crawler_service_spark.sources.storage import SnapshotStore
 
-    r03: the files are written by a PLAIN sorted parquet write, stamped
-    with bucket-id filenames (see bucketize_files), and registered via
-    one CREATE TABLE DDL — measured against the bucketBy+sortBy
-    saveAsTable path this removes pure overhead at both levels (c4
-    29.2→20.4 s, c16 8.2→6.2 s on the 21M-row snapshot,
-    scripts/exp_rank_variants2.py): saveAsTable's bucketed write path
-    re-sorts by (bucketId, sort_cols…) through a second sorter pass and
-    pays catalog round-trips inside the timed region.
-    ``SPARK_GRAFT_BUCKETSORT_WRITE=saveAsTable`` selects the native
-    bucketed write instead (A/B lever, r03 VERDICT item 2)."""
-    path = f"{SNAP_DIR}/{name}"
-    write_mode = os.environ.get("SPARK_GRAFT_BUCKETSORT_WRITE", "rename")
-    if write_mode == "saveAsTable":
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (df.repartition(buckets, *[F.col(c) for c in cols])
-         .write.mode("overwrite").format("parquet")
-         .bucketBy(buckets, *cols).sortBy(*sort_cols)
-         .option("path", path).saveAsTable(name))
-        return spark.table(name)
-    if write_mode != "rename":
-        raise ValueError(
-            f"SPARK_GRAFT_BUCKETSORT_WRITE must be 'rename' or "
-            f"'saveAsTable', got {write_mode!r}")
-    (df.repartition(buckets, *[F.col(c) for c in cols])
-     .sortWithinPartitions(*sort_cols)
-     .write.mode("overwrite").parquet(path))
-    bucketize_files(path, buckets)
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    spark.sql(
-        f"CREATE TABLE {name} ({df.schema.toDDL()}) USING parquet "
-        f"CLUSTERED BY ({', '.join(cols)}) "
-        f"SORTED BY ({', '.join(sort_cols)}) "
-        f"INTO {buckets} BUCKETS LOCATION '{path}'")
-    return spark.table(name)
+    store = SnapshotStore(SNAP_DIR)
+    store.write_table_bucketed(df, name, 0, PARTS, ["host", "_salt"],
+                               SNAPSHOT_SORT)
+    return store.read_table_bucketed(spark, name, 0, PARTS,
+                                     ["host", "_salt"], SNAPSHOT_SORT)
 
 
 def settle(spark: SparkSession) -> None:
@@ -343,14 +193,12 @@ def synth_frontier(spark: SparkSession, n: int, n_hosts: int) -> DataFrame:
     the dirty-variant cycle exercised by the canonicalizer (ports, case,
     trailing slash, unsorted query).
 
-    Partition count is pinned to SPARK_GRAFT_SHUFFLE_PARTS (not
-    defaultParallelism): the scaling comparison needs the IDENTICAL
-    input layout at every parallelism level — spark.range's default
-    ties partitions to the core count, which handed c4 coarse 8-way
-    scans and c16 32-way ones.
+    Partition count is pinned to PARTS (not defaultParallelism): the
+    scaling comparison needs the IDENTICAL input layout at every
+    parallelism level — spark.range's default ties partitions to the
+    core count, which handed c4 coarse 8-way scans and c16 32-way ones.
     """
-    parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "64"))
-    df = spark.range(0, n, 1, parts).withColumn(
+    df = spark.range(0, n, 1, PARTS).withColumn(
         "u", (F.pmod(F.xxhash64("id"), F.lit(1 << 20))) / F.lit(float(1 << 20))
     )
     host_id = F.floor(F.pow(F.lit(float(n_hosts)), F.col("u"))).cast("long")
@@ -391,6 +239,69 @@ def timed_reps(spark, run, n: int, reps: int) -> dict:
     return {"sec": best, "urls_per_sec": round(n / best, 1), "rep_runs": runs}
 
 
+def make_seen(spark: SparkSession, n: int, n_hosts: int) -> DataFrame:
+    """A pre-existing seen set covering ~1/3 of the frontier, persisted
+    once (its build cost is excluded from the timed region) and
+    pre-partitioned on the composite hash-prefixed key the anti-join
+    uses: the seen side then joins with NO per-round exchange (cluster
+    analog: a bucketed/Iceberg seen table bucketed on the key)."""
+    from crawler_service_spark.functions.urls import canonicalize_frame
+    from crawler_service_spark.operators.dedup import with_key_hash
+
+    seen = canonicalize_frame(
+        synth_frontier(spark, n, n_hosts).filter(F.col("discovery_seq") % 3 == 0),
+        "url",
+    ).select("canon_url")
+    seen = with_key_hash(seen, ["canon_url"])
+    seen = seen.repartition(PARTS, "_kh", "canon_url").persist()
+    seen.count()
+    return seen
+
+
+def schedule_core(spark: SparkSession, src: DataFrame, seen: DataFrame,
+                  n_rows: int, host_stage: str, name: str) -> DataFrame:
+    """canonicalize → first-occurrence dedup → seen anti-join → host →
+    bucket-sorted round snapshot → politeness rank; returns the admitted
+    batch (lazy)."""
+    from crawler_service_spark.functions.urls import canonicalize_frame, host_native
+    from crawler_service_spark.operators.dedup import anti_join_seen, first_occurrence
+    from crawler_service_spark.operators.politeness import presalt, schedule_round
+
+    b = canonicalize_frame(src, "url")
+    if host_stage == "early":
+        b = b.withColumn("host", host_native(F.col("url")))
+    # window strategy: the round's input frontier is unique-heavy
+    # (link-expansion dedup already ran when these URLs were
+    # discovered), so the min-struct agg's map-side sort collapses
+    # nothing and just burns a second DRAM pass — measured 46.0s(agg)
+    # vs 34.4s(window) at c16, 111.6 vs 116.6 at c4 on the 32M core
+    # (BENCH/BASELINE.md shape decision 1)
+    b = first_occurrence(b, ["canon_url"], ["discovery_seq"],
+                         keep_hash=True, strategy="window")
+    b = anti_join_seen(b, seen, ["canon_url"], shuffle_hash=True, hash_key=True)
+    if host_stage == "late":
+        # host is a pure function of the URL: computing it AFTER the
+        # dedup exchange + anti-join keeps ~18B/row of host strings
+        # out of the job's biggest shuffle and runs the extraction
+        # regex on the surviving ~2/3 of rows only
+        b = b.withColumn("host", host_native(F.col("url")))
+    # width n/64 (was n/256): the offsets frame the rank broadcasts is
+    # hosts x (n/width) rows — 4x smaller here, measured rank c4
+    # 8.05->6.14 s / c16 3.75->3.14 s (r03); write balance unhurt (64
+    # salts/host still spread over all buckets)
+    salt_width = max(1 << 14, n_rows // SALT_DENOM)
+    # the snapshot layout IS the scheduling layout, and the rank's
+    # bucket counts come from the bucketed scan itself: a plain-parquet
+    # counts source measured slower at both levels (c4 median 110.7 vs
+    # 115.4 s, c16 31.7 vs 32.4 s; BENCH/BASELINE.md shape decision 5)
+    b = snapshot_bucket_sorted(spark, presalt(b, salt_width), name)
+    admitted, _ = schedule_round(
+        b, None, default_limit=10, default_window_s=60,
+        round_epoch=0.0, priority_col="depth", rank_strategy="presalted",
+    )
+    return admitted
+
+
 def run_schedule_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
                      reps: int = 1) -> dict:
     """The north-rule job, structured like one engine round (engine.py
@@ -398,126 +309,35 @@ def run_schedule_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
     previous round's snapshot — persisted here, so the fast/slow canon
     union and the rank's offset branch re-read memory, not lineage);
     the built batch is materialized again before scheduling (the round
-    snapshot). Materializations use memory persist rather than the
-    single local disk: on a cluster the snapshot write is distributed
+    snapshot, on tmpfs: on a cluster the snapshot write is distributed
     object-store IO that scales with executors, but one laptop disk
     does not — a disk-bound stage would benchmark the disk, not the
-    engine (BENCH/BASELINE.md documents this proxy choice)."""
-    from crawler_service_spark.functions.urls import canonicalize_frame, host_native
-    from crawler_service_spark.operators.dedup import with_key_hash, anti_join_seen, first_occurrence
-    from crawler_service_spark.operators.politeness import presalt, schedule_round
-
-    parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "64"))
-    # bucket count for the bucket-sorted snapshot. 256 dates from the
-    # adaptive rank's separate SORT stage (finer sorts, shorter tails);
-    # with the layout the sort is gone and 256 one-bucket files only buy
-    # scheduling latency — a 256-task counts scan (bucketed scans cannot
-    # coalesce), 256 write commits, 256-file listings. 64 measured ~9%
-    # faster at c16 and neutral at c4 (in-JVM alternating A/B,
-    # /tmp-less: scripts/exp_sched_actions.py + ab pairs).
-    rank_parts = int(os.environ.get("SPARK_GRAFT_RANK_PARTS", "64"))
-
+    engine; BENCH/BASELINE.md documents this proxy choice)."""
     # resolved ONCE from the MEASURED n: the 1/40-scale warmup must
     # exercise the same early/late branch as the timed run, or the late
     # branch's first-use codegen/broadcast setup lands in the timed
     # region (ADVICE r04 medium)
-    host_stage = resolve_host_stage(n, cpus)
+    host_stage = resolve_host_stage(n)
 
-    def run_pipeline(src: DataFrame, seen_df: DataFrame, n_rows: int):
+    def run_pipeline(src: DataFrame, n_rows: int) -> None:
         """Identical pipeline (same host_stage branch) for warmup and the
         measured run; only the input size differs."""
-        b = canonicalize_frame(src, "url")
-        if host_stage == "early":
-            b = b.withColumn("host", host_native(F.col("url")))
-        # window strategy: the round's input frontier is unique-heavy
-        # (link-expansion dedup already ran when these URLs were
-        # discovered), so the min-struct agg's map-side sort collapses
-        # nothing and just burns a second DRAM pass — measured 46.0s(agg)
-        # vs 34.4s(window) at c16, 111.6 vs 116.6 at c4 on the 32M core
-        b = first_occurrence(b, ["canon_url"], ["discovery_seq"],
-                             keep_hash=True, strategy=DEDUP_STRATEGY)
-        b = anti_join_seen(b, seen_df, ["canon_url"],
-                           shuffle_hash=True, hash_key=True)
-        if host_stage == "late":
-            # host is a pure function of the URL: computing it AFTER the
-            # dedup exchange + anti-join keeps ~18B/row of host strings
-            # out of the job's biggest shuffle and runs the extraction
-            # regex on the surviving ~2/3 of rows only — shuffle bytes
-            # are the box's non-scaling resource (exp_eventlog_sched)
-            b = b.withColumn("host", host_native(F.col("url")))
-        # width n/64 (was n/256): the offsets frame the rank broadcasts is
-        # hosts x (n/width) rows — 4x smaller here, measured rank c4
-        # 8.05->6.14 s / c16 3.75->3.14 s (exp_rank_variants2); write
-        # balance unhurt (64 salts/host still spread over all buckets)
-        salt_width = max(1 << 14, n_rows // SALT_DENOM)
-        if SNAPSHOT_LAYOUT in ("bucketed", "bucketsort"):
-            # snapshot layout IS the scheduling layout: written bucketed
-            # on (host, _salt), so the rank needs no exchange and no
-            # driver stats barrier (rank_presalted); "bucketsort" also
-            # pre-repartitions and sorts in-bucket so the rank is
-            # additionally sort-free over one file per bucket
-            # rank counts come from the bucketed scan itself: the 2x2
-            # matrix A/B (scripts/exp_sched_matrix.py) measured the
-            # plain-parquet counts_src alternative SLOWER end-to-end at
-            # both levels (c4 median 110.7 vs 115.4 s, c16 31.7 vs
-            # 32.4 s) — the re-scan + tiny exchange costs what the
-            # per-bucket reader setup costs, so keep the simpler
-            # exchange-free plan
-            if SNAPSHOT_LAYOUT == "bucketsort":
-                b = snapshot_bucket_sorted(
-                    spark, presalt(b, salt_width), "sched_round",
-                    rank_parts, ["host", "_salt"],
-                    ["host", "depth", "_salt", "discovery_seq"])
-            else:
-                b = snapshot_bucketed(spark, presalt(b, salt_width),
-                                      "sched_round", rank_parts,
-                                      ["host", "_salt"])
-            admitted, _ = schedule_round(
-                b, None, default_limit=10, default_window_s=60,
-                round_epoch=0.0, priority_col="depth",
-                rank_strategy="presalted",
-            )
-        else:
-            # round snapshot: tmpfs parquet (see `snapshot`) — the
-            # schedule's branches then re-read columnar parquet
-            b = snapshot(spark, b, "sched_round")
-            admitted, _ = schedule_round(
-                b, None, default_limit=10, default_window_s=60,
-                round_epoch=0.0, priority_col="depth",
-                shuffle_partitions=rank_parts,
-                salt_width=salt_width,
-            )
-        force(admitted)
-        return b
+        force(schedule_core(spark, src, seen, n_rows, host_stage, "sched_round"))
 
     frontier = synth_frontier(spark, n, n_hosts).persist()
     frontier.count()
-    # a pre-existing seen set covering ~1/3 of the frontier (cached once;
-    # its build cost is excluded from the timed region)
-    seen = (
-        canonicalize_frame(
-            synth_frontier(spark, n, n_hosts).filter(F.col("discovery_seq") % 3 == 0),
-            "url",
-        )
-        .select("canon_url")
-    )
-    # pre-partitioned on the composite hash-prefixed key the anti-join
-    # uses: the persisted seen side then joins with NO per-round exchange
-    # (cluster analog: a bucketed/Iceberg seen table bucketed on the key)
-    seen = with_key_hash(seen.select("canon_url"), ["canon_url"])
-    seen = seen.repartition(parts, "_kh", "canon_url").persist()
-    seen.count()
+    seen = make_seen(spark, n, n_hosts)
 
     # warmup (excluded): same pipeline at 1/40 scale — forks the Python
     # worker pool, JIT-compiles the generated code, and exercises the
     # broadcast path once, so the timed region measures throughput, not
     # first-use setup (which is identical at every parallelism level and
     # would otherwise swamp the faster one)
-    wf = synth_frontier(spark, max(100_000, n // 40), n_hosts)
-    run_pipeline(wf, seen, max(100_000, n // 40))
+    wn = max(100_000, n // 40)
+    run_pipeline(synth_frontier(spark, wn, n_hosts), wn)
     settle(spark)
 
-    res = timed_reps(spark, lambda: run_pipeline(frontier, seen, n), n, reps)
+    res = timed_reps(spark, lambda: run_pipeline(frontier, n), n, reps)
     seen.unpersist()
     frontier.unpersist()
     return {"n_urls": n, "n_hosts": n_hosts, "cpus": cpus, **res}
@@ -533,13 +353,9 @@ def run_round_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
     per-round workload (extraction dominates at real page sizes, and
     Arrow-batched Python workers scale near-linearly with cores)."""
     from crawler_service_spark.config import CrawlConfig
-    from crawler_service_spark.functions.urls import canonicalize_frame, host_native
-    from crawler_service_spark.operators.dedup import with_key_hash, anti_join_seen, first_occurrence
+    from crawler_service_spark.functions.urls import canonicalize_frame
     from crawler_service_spark.operators.extract import extract_pages
-    from crawler_service_spark.operators.politeness import presalt, schedule_round
 
-    parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "64"))
-    rank_parts = int(os.environ.get("SPARK_GRAFT_RANK_PARTS", "64"))
     cfg = CrawlConfig()
 
     def mk_store(src: DataFrame) -> DataFrame:
@@ -557,64 +373,29 @@ def run_round_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
         return (
             canonicalize_frame(src, "url")
             .select("canon_url", html.alias("html"))
-            .repartition(parts, "canon_url")   # bucketed-store analog
+            .repartition(PARTS, "canon_url")   # bucketed-store analog
         )
 
     # resolved ONCE from the MEASURED n — see run_schedule_job (ADVICE r04)
-    host_stage = resolve_host_stage(n, cpus)
+    host_stage = resolve_host_stage(n)
 
-    def run_pipeline(src: DataFrame, seen_df: DataFrame, store_df: DataFrame,
-                     n_rows: int) -> None:
-        b = canonicalize_frame(src, "url")
-        if host_stage == "early":
-            b = b.withColumn("host", host_native(F.col("url")))
-        b = first_occurrence(b, ["canon_url"], ["discovery_seq"],
-                             keep_hash=True, strategy=DEDUP_STRATEGY)
-        b = anti_join_seen(b, seen_df, ["canon_url"],
-                           shuffle_hash=True, hash_key=True)
-        if host_stage == "late":
-            b = b.withColumn("host", host_native(F.col("url")))
-        # width n/64 (was n/256): the offsets frame the rank broadcasts is
-        # hosts x (n/width) rows — 4x smaller here, measured rank c4
-        # 8.05->6.14 s / c16 3.75->3.14 s (exp_rank_variants2); write
-        # balance unhurt (64 salts/host still spread over all buckets)
-        salt_width = max(1 << 14, n_rows // SALT_DENOM)
-        if SNAPSHOT_LAYOUT in ("bucketed", "bucketsort"):
-            # counts from the bucketed scan — the plain counts_src
-            # alternative measured slower at both levels (see the
-            # schedule job above / scripts/exp_sched_matrix.py)
-            if SNAPSHOT_LAYOUT == "bucketsort":
-                b = snapshot_bucket_sorted(
-                    spark, presalt(b, salt_width), "round_batch",
-                    rank_parts, ["host", "_salt"],
-                    ["host", "depth", "_salt", "discovery_seq"])
-            else:
-                b = snapshot_bucketed(spark, presalt(b, salt_width),
-                                      "round_batch", rank_parts,
-                                      ["host", "_salt"])
-            admitted, _ = schedule_round(
-                b, None, priority_col="depth", rank_strategy="presalted",
-            )
-        else:
-            # round snapshot: tmpfs parquet (see `snapshot`)
-            b = snapshot(spark, b, "round_batch")
-            admitted, _ = schedule_round(
-                b, None, priority_col="depth",
-                shuffle_partitions=rank_parts, salt_width=salt_width,
-            )
+    def run_pipeline(src: DataFrame, n_rows: int) -> None:
+        admitted = schedule_core(spark, src, seen, n_rows, host_stage,
+                                 "round_batch")
         fetched = (
             # pre-align the (html-free) admitted side with the store's
-            # hash partitioning: the join output then inherits `parts`
+            # hash partitioning: the join output then inherits PARTS
             # uniform partitions (canon_url hashes uniformly) and the
             # Arrow extraction fuses into the join stage — the previous
             # post-join round-robin repartition pushed every html-bearing
             # row through a second full exchange (measured 9-13% of the
-            # fetch+extract phase at c16, scripts/exp_fetch_join.py).
-            # The explicit partition count also pins the stage against
-            # AQE byte-based coalescing (extraction cost is per ROW).
+            # fetch+extract phase at c16, BENCH/BASELINE.md shape
+            # decision 3). The explicit partition count also pins the
+            # stage against AQE byte-based coalescing (extraction cost
+            # is per ROW).
             admitted.drop("_salt")
-            .repartition(parts, F.col("canon_url"))
-            .join(store_df, "canon_url", "left")
+            .repartition(PARTS, F.col("canon_url"))
+            .join(store, "canon_url", "left")
             .withColumn("is_error", F.col("html").isNull())
         )
         pages = extract_pages(fetched, cfg)
@@ -622,24 +403,16 @@ def run_round_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
 
     frontier = synth_frontier(spark, n, n_hosts).persist()
     frontier.count()
-    seen = (
-        canonicalize_frame(
-            synth_frontier(spark, n, n_hosts).filter(F.col("discovery_seq") % 3 == 0),
-            "url",
-        ).select("canon_url")
-    )
-    seen = with_key_hash(seen.select("canon_url"), ["canon_url"])
-    seen = seen.repartition(parts, "_kh", "canon_url").persist()
-    seen.count()
+    seen = make_seen(spark, n, n_hosts)
     store = mk_store(synth_frontier(spark, n, n_hosts)).persist()
     store.count()
 
     # warmup at 1/40 scale (excluded) — see run_schedule_job
     wn = max(50_000, n // 40)
-    run_pipeline(synth_frontier(spark, wn, n_hosts), seen, store, wn)
+    run_pipeline(synth_frontier(spark, wn, n_hosts), wn)
     settle(spark)
 
-    res = timed_reps(spark, lambda: run_pipeline(frontier, seen, store, n), n, reps)
+    res = timed_reps(spark, lambda: run_pipeline(frontier, n), n, reps)
     for df in (frontier, seen, store):
         df.unpersist()
     return {"n_urls": n, "n_hosts": n_hosts, "cpus": cpus, **res}

@@ -79,31 +79,28 @@ class CrawlConfig:
     # engine/scale knobs (no semantic effect; partitioning only)
     seq_buckets: int = 64                 # two-level dense-seq bucket count
     shuffle_partitions: int = 32
-    bloom_num_bits: int = 1 << 20         # seen-filter prefilter bitmap size
+    # seen-set bloom prefilter (operators/dedup.ShardedBloomFilter): a
+    # DataFrame of non-zero bitmap words split into bloom_shards key-hash
+    # shards (must be > 0); the driver never holds bitmap bytes
+    bloom_num_bits: int = 1 << 20
     bloom_num_hashes: int = 3
-    bloom_shards: int = 16                # >0: sharded DataFrame-resident
-                                          # filter (scale path); 0: legacy
-                                          # driver bitmap
+    bloom_shards: int = 16
     # cumulative-seen row count past which (a) the seen anti-join flips
     # to a shuffled-hash build and (b) the bloom prefilter engages —
     # below it the planner's broadcast-anti plan is already free and the
     # prefilter would cost more than the join it saves (r02 VERDICT
     # item 3: small crawls paid 3.6× for nothing). Set 0 to force the
-    # prefilter on from round 0 (tests / A-Bs).
+    # prefilter on from round 0.
     large_seen_threshold: int = 2_000_000
 
-    # frontier snapshot layout (north-rule scale path): "bucketsort"
-    # writes each frontier snapshot hash-clustered on (host, _salt =
-    # discovery_seq div frontier_salt_width) AND in-bucket-sorted
-    # depth-major on (host, depth, _salt, discovery_seq), exactly one
-    # file per bucket — the next round's politeness rank then plans
-    # with no payload exchange, no sort, and no driver stats barrier
-    # (operators/politeness.rank_presalted). Composes with deferral
-    # (budget_rounds set) since r03: the rank partitions by
-    # (host, depth, _salt), so mixed-depth frontiers from deferred
-    # re-entries rank correctly over the same layout. "flat" = plain
-    # parquet + adaptive hot-host rank. Result-identical either way.
-    frontier_layout: str = "bucketsort"
+    # width of the contiguous discovery_seq ranges that salt each host's
+    # frontier rows: every frontier snapshot is hash-clustered on
+    # (host, _salt = discovery_seq div frontier_salt_width) and
+    # in-bucket-sorted depth-major on (host, depth, _salt,
+    # discovery_seq), exactly one file per bucket, so the next round's
+    # politeness rank plans with no payload exchange, no sort and no
+    # driver stats barrier (operators/politeness.rank_presalted) — also
+    # under deferral, where frontiers mix depths within a host.
     frontier_salt_width: int = 1 << 18
 
     # virtual-clock origin for deterministic scheduling timestamps

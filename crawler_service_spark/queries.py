@@ -171,9 +171,9 @@ SQL_F1 = """
 # per-shard array probe, the bloom entry's remaining gap vs the plain
 # anti-join at sf0.1 is FIXED per-invocation cost (plan build + one
 # extra broadcast barrier on a ~0.15 s job). Steady-state plans measure
-# ratio 0.99 at 150k rows, 1.19 at 1.5M, 1.25 at 6M
-# (scripts/exp_bloom_scale.py) — and at sf0.1's 50k-row seen set the
-# engine's shipped policy would take the plain broadcast anti-join
+# ratio 0.99 at 150k rows, 1.19 at 1.5M, 1.25 at 6M (BENCH/NOTES_r05.md,
+# "d1_bloom_sharded vs d1_seen_antijoin") — and at sf0.1's 50k-row seen
+# set the engine's shipped policy would take the plain broadcast anti-join
 # anyway; the sharded bloom engages past large_seen_threshold, where
 # its point is shrinking the seen-side SHUFFLE.
 def _session_cache(spark, attr: str) -> dict:
@@ -253,16 +253,6 @@ def q_d2_first_occurrence(spark, sf_dir):
     return first_occurrence(ev, ["k"], ["ts", "event_id"]).select("k", "event_id")
 
 
-def q_d2_first_occurrence_window(spark, sf_dir):
-    """Same D2 semantics through the window physical strategy (one
-    post-shuffle sort — the unique-heavy-batch shape; operators/dedup.py
-    docstring). Identical oracle: the strategies must be row-identical."""
-    ev = load(spark, sf_dir, "events").withColumn("k", F.col("user_id") % 500)
-    return first_occurrence(
-        ev, ["k"], ["ts", "event_id"], strategy="window"
-    ).select("k", "event_id")
-
-
 SQL_D2 = """
     SELECT user_id % 500 AS k, event_id FROM events
     QUALIFY row_number() OVER (PARTITION BY user_id % 500 ORDER BY ts, event_id) = 1
@@ -274,6 +264,9 @@ SQL_D2 = """
 # ---------------------------------------------------------------------------
 
 def q_rl1_budget_rank(spark, sf_dir):
+    """RL1 rank + virtual schedule on an unsalted batch with the default
+    salt width: every host's ~100 rows fall in ONE salt bucket, so the
+    bucket offsets are all 0 and the rank is the plain per-host window."""
     ev = load(spark, sf_dir, "events")
     batch = ev.select(
         F.concat(F.lit("h"), (F.col("user_id") % 100).cast("string")).alias("host"),
@@ -293,9 +286,10 @@ def q_rl1_budget_rank(spark, sf_dir):
 
 
 def q_rl1_budget_rank_salted(spark, sf_dir):
-    """Same rank, HOT path: salt_width=50 makes every 100-row host "hot",
-    so the DuckDB oracle also gates the salted two-level rank (the cold
-    path is what sf0.01 data exercises by default)."""
+    """Same rank on an unsalted batch with salt_width=50:
+    ``schedule_round`` salts each host into 50-wide ``discovery_seq``
+    buckets itself, so the DuckDB oracle also gates the multi-bucket
+    offsets (the default width gives every host one bucket)."""
     ev = load(spark, sf_dir, "events")
     batch = ev.select(
         F.concat(F.lit("h"), (F.col("user_id") % 100).cast("string")).alias("host"),
@@ -315,11 +309,10 @@ def q_rl1_budget_rank_salted(spark, sf_dir):
 
 
 def q_rl1_budget_rank_presalted(spark, sf_dir):
-    """Same rank through the LAYOUT path: the batch carries a
-    materialized ``_salt`` column (presalt) and ranks with the
-    exchange-free offsets-join rank (rank_presalted) — the shape a
-    bucketed/Iceberg frontier snapshot enables. Identical oracle: all
-    three rank strategies must be row-identical."""
+    """Same rank on a batch the CALLER presalted (``presalt(batch, 50)``)
+    — the engine's shape, where the frontier snapshot carries ``_salt``
+    and ``schedule_round`` ranks it as it arrives. Identical oracle: all
+    three inputs must rank row-identically."""
     from crawler_service_spark.operators.politeness import presalt
     ev = load(spark, sf_dir, "events")
     batch = ev.select(
@@ -676,7 +669,8 @@ def q_dedup_minhash_sig(spark, sf_dir):
     than one seeded md5 per lane. The shared hash array is built in its
     own projection; CollapseProject keeps the expensive producer out of
     the four consumers (optimized plan carries exactly one md5 node —
-    measured 9.3s -> 3.2s at sf0.1, scripts/exp_minhash_lanes.py).
+    measured 9.3s -> 3.2s at sf0.1, BENCH/NOTES_r05.md "dedup_minhash_sig
+    — hash once, slice the digest").
     At scale the whole map is native expressions, no shuffle."""
     doc = load(spark, sf_dir, "documents")
     hs = doc.select("doc_id", F.expr(_MH_SHINGLES).alias("_hs"))
@@ -958,14 +952,11 @@ SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "d2_first_occurrence": q_d2_first_occurrence,
     # NOTE: the registry is capped at 50 keys — the driver's correctness
     # harness records at most 50 rows (r02 registered 51, recorded 50,
-    # silently dropping the last key), so result-identical physical
-    # variants ROTATE through the spare slot for an oracle row across
-    # rounds (r03 VERDICT item 7): r03 ran d2_first_occurrence_window
-    # (green r02+r03; strategies stay pinned row-identical by
-    # tests/test_dedup_strategies.py), r04 hands that slot to the salted
-    # rank so all three RL1 strategies have oracle rows over r01–r04
-    # (salted stays pinned by tests/test_politeness_rank.py::
-    # test_salted_rank_equals_plain_window regardless).
+    # silently dropping the last key). The three RL1 keys share one
+    # oracle and differ only in how the batch arrives at schedule_round
+    # (one salt bucket per host / salted inside / presalted by caller);
+    # first_occurrence's window strategy is pinned row-identical to the
+    # agg strategy by tests/test_dedup_strategies.py instead of a key.
     "rl1_budget_rank": q_rl1_budget_rank,
     "rl1_budget_rank_salted": q_rl1_budget_rank_salted,
     "rl1_budget_rank_presalted": q_rl1_budget_rank_presalted,

@@ -176,7 +176,7 @@ class SnapshotStore:
         saveAsTable bucketed-write path re-sorts by (bucketId,
         sort_cols…) and pays catalog round-trips per round; measured
         c4 29.2→20.4 s / c16 8.2→6.2 s on the 21M-row bench snapshot
-        (scripts/exp_rank_variants2.py)."""
+        (r03 in-JVM A/B)."""
         spark = df.sparkSession
         name = self._bucket_table_name(table, rnd)
         path = self._table_path(table, rnd)

@@ -546,7 +546,7 @@ The lesson generalizes to the 100 TB cluster: these are exactly the
 layout decisions an Iceberg frontier table (bucket-sorted on
 host-hash/seq-range) and a bucketed content store give for free — the
 bench proves the plan shapes, the engine ships them
-(CrawlConfig.frontier_layout, engine.py fetch join).
+(engine.py frontier layout and fetch join).
 """)
         f.write(addendum)
     print(json.dumps({"jobs": summary, "report": path}))

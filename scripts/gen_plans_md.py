@@ -87,28 +87,17 @@ def main() -> None:
         fo,
     )
 
-    # 4. politeness schedule — adaptive skew-safe rank
+    # 4. presalted rank over a bucket-sorted frontier snapshot — the
+    # engine's per-round layout path
+    import tempfile
+
+    from crawler_service_spark.operators.politeness import presalt
+
     frontier = spark.range(20_000).select(
         F.concat(F.lit("h"), (F.col("id") % 7).cast("string")).alias("host"),
         F.lit(0).alias("depth"),
         F.col("id").alias("discovery_seq"),
     )
-    sched, _ = schedule_round(frontier, None, shuffle_partitions=8, salt_width=2000)
-    add(
-        "RL1 politeness rank (adaptive hot-host salting)",
-        "Cold hosts rank in a plain window; hot hosts (>= salt_width rows) "
-        "rank per contiguous seq-bucket with broadcast offsets — "
-        "`BroadcastHashJoin` joins the membership and offset sides back, "
-        "and no per-host serial task survives.",
-        sched,
-    )
-
-    # 4b. presalted rank over a bucket-sorted frontier snapshot — the
-    # engine's shipped layout path (frontier_layout="bucketsort")
-    import tempfile
-
-    from crawler_service_spark.operators.politeness import presalt
-
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     bs_dir = tempfile.mkdtemp(prefix="plans_bsnap_")
     spark.sql("DROP TABLE IF EXISTS plans_bucket_snap")

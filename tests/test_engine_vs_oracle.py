@@ -39,12 +39,10 @@ def _policy_dict(policy_df):
     }
 
 
-def _run_engine(spark, cfg, tmp, use_bloom=True, policy=None):
+def _run_engine(spark, cfg, tmp, policy=None):
     store = build_store_df(spark, N_DOCS, N_HOSTS)
     seeds = build_seeds_df(spark, N_DOCS, N_HOSTS, N_SEEDS)
-    engine = CrawlEngine(
-        spark, cfg, store, checkpoint_dir=tmp, policy=policy, use_bloom=use_bloom
-    )
+    engine = CrawlEngine(spark, cfg, store, checkpoint_dir=tmp, policy=policy)
     return engine.crawl(seeds)
 
 
@@ -132,14 +130,6 @@ def test_engine_matches_oracle_with_robots(spark):
         _compare_seen(tables, oracle)
 
 
-def test_engine_no_bloom_same_result(spark):
-    cfg = CrawlConfig(max_depth=2, follow_links=True, respect_robots=False)
-    with tempfile.TemporaryDirectory() as tmp:
-        tables = _run_engine(spark, cfg, tmp, use_bloom=False)
-        oracle = _run_oracle(spark, cfg)
-        _compare(tables, oracle)
-
-
 def test_engine_bloom_engaged_same_result(spark):
     """The prefilter is gated on large_seen_threshold (dormant on small
     crawls); force it on from round 0 and assert the bloom-engaged path
@@ -147,7 +137,7 @@ def test_engine_bloom_engaged_same_result(spark):
     cfg = CrawlConfig(max_depth=2, follow_links=True, respect_robots=False,
                       large_seen_threshold=0)
     with tempfile.TemporaryDirectory() as tmp:
-        tables = _run_engine(spark, cfg, tmp, use_bloom=True)
+        tables = _run_engine(spark, cfg, tmp)
         oracle = _run_oracle(spark, cfg)
         _compare(tables, oracle)
         _compare_seen(tables, oracle)
@@ -203,30 +193,59 @@ def test_engine_matches_oracle_with_deferral(spark):
         _compare_seen(tables, oracle)
 
 
-def test_engine_deferral_flat_vs_bucketsort_layout(spark):
-    """r03: deferral composes with the bucketsort layout (the rank is
-    depth-major per bucket). Both layouts must produce identical fetch
-    order and seen sets on a deferral-heavy crawl."""
-    from crawler_service_spark.engine import fetch_order
+# (config, docs, hosts, seeds): a 3-round BFS crawl over 5 hosts, and
+# the 60-doc single-host crawl where rows defer round after round
+RANK_CRAWLS = {
+    "bfs": (dict(max_depth=2, follow_links=True, shuffle_partitions=8),
+            120, 5, 3),
+    "deferral": (dict(max_depth=0, follow_links=True, respect_robots=False,
+                      budget_rounds=1, default_rate_limit=10),
+                 60, 1, 1),
+}
 
-    def run(layout):
-        cfg = CrawlConfig(
-            max_depth=0, follow_links=True, respect_robots=False,
-            budget_rounds=1, default_rate_limit=10, frontier_layout=layout,
-        )
-        with tempfile.TemporaryDirectory() as tmp:
-            store = build_store_df(spark, 60, 1)
-            seeds = build_seeds_df(spark, 60, 1, 1)
-            engine = CrawlEngine(spark, cfg, store, checkpoint_dir=tmp)
-            tables = engine.crawl(seeds)
-            pages = fetch_order(tables.pages).select(
-                "task_id", "fetch_seq", "url", "depth", "round",
-                "virtual_fetch_time").collect()
-            seen = {(r["task_id"], r["canon_url"])
-                    for r in tables.seen.collect()}
-            return sorted(tuple(r) for r in pages), seen
 
-    assert run("bucketsort") == run("flat")
+@pytest.mark.parametrize("crawl", sorted(RANK_CRAWLS))
+def test_engine_rank_and_vft_match_reference(spark, crawl):
+    """Every fetched page's host_rank and virtual_fetch_time equal the
+    plain per-host window over its round's pages, ordered by (depth,
+    discovery_seq), fed through the virtual-fetch-time formula. A round
+    admits each host's top-ranked frontier rows, so ranking the round's
+    pages alone reproduces their ranks. The round epoch is the deferral
+    schedule (round × budget_rounds × window), or without deferral the
+    previous round's last virtual fetch plus one window (no host policy,
+    so no larger window or crawl delay)."""
+    from rank_reference import reference_rank, reference_vft
+
+    kw, n_docs, n_hosts, n_seeds = RANK_CRAWLS[crawl]
+    cfg = CrawlConfig(**kw)
+    with tempfile.TemporaryDirectory() as tmp:
+        engine = CrawlEngine(spark, cfg, build_store_df(spark, n_docs, n_hosts),
+                             checkpoint_dir=tmp)
+        pages = engine.crawl(build_seeds_df(spark, n_docs, n_hosts, n_seeds)).pages
+        rows = pages.select("round", "host", "depth", "discovery_seq",
+                            "host_rank", "virtual_fetch_time").collect()
+    rounds = sorted({r["round"] for r in rows})
+    assert len(rounds) >= 3, rounds
+    if cfg.budget_rounds is not None:
+        epochs = {r: cfg.round_epoch
+                  + r * cfg.budget_rounds * cfg.rate_limit_window_s
+                  for r in rounds}
+    else:
+        last_vft = {r: max(x["virtual_fetch_time"] for x in rows
+                           if x["round"] == r) for r in rounds}
+        epochs = {r: last_vft[r - 1] + cfg.rate_limit_window_s if r
+                  else cfg.round_epoch for r in rounds}
+    epoch_of = F.create_map(*[F.lit(x) for kv in epochs.items() for x in kv])
+
+    df = spark.createDataFrame(rows)
+    ref = reference_rank(df.drop("host_rank", "virtual_fetch_time"),
+                         partition_cols=("round", "host"))
+    ref = ref.withColumn("virtual_fetch_time", reference_vft(
+        F.col("host_rank"), cfg.default_rate_limit, cfg.rate_limit_window_s,
+        epoch=epoch_of[F.col("round")]))
+    cols = df.columns
+    assert ({tuple(r) for r in df.select(cols).collect()}
+            == {tuple(r) for r in ref.select(cols).collect()})
 
 
 def test_politeness_invariant(spark):

@@ -1,6 +1,6 @@
 """Parity of the JVM-native canonicalization fast path vs the exact
-`urllib.parse` pandas UDF (the source of truth), and of the two-level
-skew-resistant host rank vs the single-window reference."""
+`urllib.parse` pandas UDF (the source of truth), and of the salted
+host rank vs the plain per-host window reference."""
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -13,6 +13,7 @@ from crawler_service_spark.functions.urls import (
     native_canon_eligible,
 )
 from crawler_service_spark.operators.politeness import schedule_round
+from rank_reference import reference_rank, reference_schedule
 
 DIRTY_URLS = [
     "https://Host.Example.com/Path/",
@@ -125,9 +126,8 @@ def test_skew_rank_matches_window_rank(spark):
         seq += 1
     df = spark.createDataFrame(rows, "host string, depth int, discovery_seq long")
     # tiny salt_width so hot hosts genuinely span many salt buckets
-    a, _ = schedule_round(df, None, skew_safe=True, shuffle_partitions=8,
-                          salt_width=64)
-    b, _ = schedule_round(df, None, skew_safe=False, shuffle_partitions=8)
+    a, _ = schedule_round(df, None, shuffle_partitions=8, salt_width=64)
+    b, _ = reference_schedule(df)
     ka = {(r["host"], r["discovery_seq"]): (r["host_rank"], r["virtual_fetch_time"])
           for r in a.collect()}
     kb = {(r["host"], r["discovery_seq"]): (r["host_rank"], r["virtual_fetch_time"])
@@ -138,13 +138,14 @@ def test_skew_rank_matches_window_rank(spark):
 
 def test_skew_rank_mixed_priority_hot_host(spark):
     """A hot host whose batch mixes priorities (deferred rows re-entering
-    a later frontier) must NOT be salted — the guard falls it back to the
-    plain window so (priority, seq) order is ranked correctly even when a
-    high-priority row has a high discovery_seq (ADVICE r01)."""
+    a later frontier) must rank in (priority, seq) order even when a
+    high-priority row has a high discovery_seq (ADVICE r01): the salted
+    rank orders its buckets priority-major."""
     rows = []
     seq = 0
     # hot host: 300 rows at depth 2, then 100 LATER-seq rows at depth 1
-    # (higher priority) — a salted rank would order these after depth 2
+    # (higher priority) — a seq-major salted rank would order these
+    # after depth 2
     for d, n in ((2, 300), (1, 100)):
         for _ in range(n):
             rows.append(("hot", d, seq))
@@ -153,9 +154,8 @@ def test_skew_rank_mixed_priority_hot_host(spark):
         rows.append(("h%d" % h, 1, seq))
         seq += 1
     df = spark.createDataFrame(rows, "host string, depth int, discovery_seq long")
-    a, _ = schedule_round(df, None, skew_safe=True, shuffle_partitions=8,
-                          salt_width=64)
-    b, _ = schedule_round(df, None, skew_safe=False, shuffle_partitions=8)
+    a, _ = schedule_round(df, None, shuffle_partitions=8, salt_width=64)
+    b = reference_rank(df)
     ka = {(r["host"], r["discovery_seq"]): r["host_rank"] for r in a.collect()}
     kb = {(r["host"], r["discovery_seq"]): r["host_rank"] for r in b.collect()}
     assert ka == kb
@@ -178,17 +178,17 @@ def test_policy_admin_mutation(spark):
 
     pol = set_host_policy(spark, None, "hot", 3, window_s=60)
     a, _ = schedule_round(df, pol, default_limit=10, default_window_s=60,
-                          budget_rounds=1, skew_safe=False)
+                          budget_rounds=1)
     assert a.count() == 3          # custom limit applies
 
     pol2 = set_host_policy(spark, pol, "hot", 7)       # upsert overwrites
     a2, _ = schedule_round(df, pol2, default_limit=10, default_window_s=60,
-                           budget_rounds=1, skew_safe=False)
+                           budget_rounds=1)
     assert a2.count() == 7
 
     pol3 = remove_host_policy(pol2, "hot")             # revert to default
     a3, _ = schedule_round(df, pol3, default_limit=10, default_window_s=60,
-                           budget_rounds=1, skew_safe=False)
+                           budget_rounds=1)
     assert a3.count() == 10
 
     with _pytest.raises(ValueError):
