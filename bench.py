@@ -459,13 +459,12 @@ def main() -> None:
     # policy (r03 VERDICT item 3)
     force(SPARK_QUERIES["d1_bloom_sharded"](spark, sf_dir))
 
-    # Every suite entry is the FASTEST of 2 back-to-back same-JVM runs
-    # (frontier jobs below already were): a single shot inherits whatever
-    # host window the driver lands in — this box's hypervisor swings
-    # identical runs up to 1.7× — and for sub-second queries also times
-    # first-use codegen instead of the operator. Per-rep walls are
-    # disclosed in ``query_rep_walls``; spin probes bracket the section
-    # so the host window is attributable.
+    # Every suite entry is the FASTEST of 2 back-to-back same-JVM runs:
+    # a single shot inherits whatever host window the driver lands in —
+    # this box's hypervisor swings identical runs up to 1.7× — and for
+    # sub-second queries also times first-use codegen instead of the
+    # operator. Per-rep walls are disclosed in ``query_rep_walls``; spin
+    # probes bracket the section so the host window is attributable.
     suite_probe_before = cpu_probe()
     timings: dict[str, float] = {}
     query_rep_walls: dict[str, list[float]] = {}
@@ -480,21 +479,6 @@ def main() -> None:
         query_rep_walls[name] = walls
     suite_probe_after = cpu_probe()
 
-    # the north-rule scheduling job + one full engine round are part of
-    # the headline suite. Fastest-of-2 same-JVM reps (the methodology
-    # the scaling campaign uses everywhere, BENCH/BASELINE.md): this
-    # host's hypervisor swings identical back-to-back runs up to 1.7×,
-    # and a single shot taken mid-suite also inherits GC debt from the
-    # 17 queries above — r03/r04 recorded 21.5/18.6 s here while the
-    # same job standalone measured 4.3–8.6 s. Per-rep walls + spin
-    # probes are disclosed below so a slow host window is attributable.
-    sched = run_schedule_job(spark, args.n_urls, args.n_hosts, cpus,
-                             reps=max(2, args.reps))
-    timings["frontier_schedule_dedup"] = sched["sec"]
-    rnd = run_round_job(spark, max(200_000, args.n_urls // 8), args.n_hosts, cpus,
-                        reps=max(2, args.reps))
-    timings["frontier_full_round"] = rnd["sec"]
-
     total = round(sum(timings.values()), 3)
     print(json.dumps({
         "metric": "headline_suite_wall_sec",
@@ -502,10 +486,6 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "frontier_urls_per_sec": sched["urls_per_sec"],
-        "round_urls_per_sec": rnd["urls_per_sec"],
-        "frontier_rep_runs": sched["rep_runs"],
-        "round_rep_runs": rnd["rep_runs"],
         "query_rep_walls": query_rep_walls,
         "suite_spin_probes": [suite_probe_before, suite_probe_after],
         "methodology": "each entry = fastest of 2 same-JVM reps; "
@@ -513,8 +493,6 @@ def main() -> None:
         "cpus": cpus,
     }))
     spark.stop()
-    import shutil
-    shutil.rmtree(SNAP_DIR, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -27,6 +27,17 @@ ordering and O(1) plans per round. url_seen is append-only: round k
 writes only the canon URLs first seen in round k; the full set is the
 union of snapshots — at 10^10 scale this is one immutable partition per
 round instead of a rewrite of the world.
+
+Fresh and resumed crawls run the same loop. A fresh crawl resets the
+store and writes the round-0 frontier; then both read the carried round
+state from the last committed round's manifest counters (defaults when
+none is committed): ``seq_base``, ``vclock_next`` and the next frontier's
+size and seq range (``next_frontier`` / ``next_seq_min`` /
+``next_seq_max``, observed on the frontier write), plus a seen total
+summed from the committed ``frontier`` counters. Those counters are the
+only state a round reads back; no round re-scans a frontier or the seen
+union to derive it. A round whose next frontier is observed empty ends
+the crawl at its commit.
 """
 
 from __future__ import annotations
@@ -62,6 +73,12 @@ from crawler_service_spark.sources.storage import SnapshotStore
 FRONTIER_COLS = [
     "task_id", "seed_netloc", "url", "canon_url", "host", "depth", "discovery_seq",
 ]
+# counters of the last committed round that the next round reads back
+_CARRIED_COUNTERS = (
+    "seq_base", "vclock_next", "next_frontier", "next_seq_min", "next_seq_max",
+)
+# next_* counters of a round that wrote no frontier: the crawl is over
+_NO_FRONTIER = {"next_frontier": 0, "next_seq_min": None, "next_seq_max": None}
 
 
 @dataclass
@@ -156,11 +173,19 @@ class CrawlEngine:
     # also when deferral mixes depths within a host.
     _FRONTIER_SORT = ["host", "depth", "_salt", "discovery_seq"]
 
-    def _write_frontier(self, df: DataFrame, rnd: int) -> None:
-        self.storage.write_table_bucketed(
+    def _write_frontier(self, df: DataFrame, rnd: int) -> dict:
+        """Write frontier ``rnd`` and return its size and seq min/max,
+        observed during the write (no extra scan) — the next round's
+        ``next_*`` counters."""
+        return self.storage.write_table_bucketed(
             presalt(df, self.cfg.frontier_salt_width), "frontier", rnd,
             self.cfg.shuffle_partitions, ["host", "_salt"],
             self._FRONTIER_SORT,
+            metrics=[
+                F.count(F.lit(1)).alias("next_frontier"),
+                F.min("discovery_seq").alias("next_seq_min"),
+                F.max("discovery_seq").alias("next_seq_max"),
+            ],
         )
 
     def _read_frontier(self, rnd: int) -> DataFrame:
@@ -169,6 +194,30 @@ class CrawlEngine:
             self.cfg.shuffle_partitions, ["host", "_salt"],
             self._FRONTIER_SORT,
         )
+
+    def _carried_state(self) -> dict:
+        """Everything a round reads back: the last committed round's
+        counters, or defaults when no round is committed. ``seen_total``
+        is the running sum of the committed ``frontier`` counters — the
+        same value an uninterrupted crawl carries, so a resumed crawl
+        picks the same seen anti-join/bloom regime."""
+        committed = self.storage.committed_rounds()
+        if not committed:
+            return {"round": 0, "seen_rounds": [], "seen_total": 0,
+                    "seq_base": 0, "vclock_next": self.cfg.round_epoch,
+                    **_NO_FRONTIER}
+        last = committed[-1]
+        for key in _CARRIED_COUNTERS:
+            if key not in last["counters"]:
+                raise ValueError(
+                    f"cannot resume: round {last['round']}'s counters lack "
+                    f"{key!r} (checkpoint written by an older engine)")
+        return {
+            "round": last["round"] + 1,
+            "seen_rounds": [e["round"] for e in committed],
+            "seen_total": sum(e["counters"]["frontier"] for e in committed),
+            **{key: last["counters"][key] for key in _CARRIED_COUNTERS},
+        }
 
     # ----------------------------------------------------------------- crawl
     def crawl(self, seeds: DataFrame | None = None, resume: bool = False) -> CrawlTables:
@@ -182,27 +231,9 @@ class CrawlEngine:
         )
 
         if resume:
-            latest = self.storage.latest_round()
-            if latest is None:
+            state = self._carried_state()
+            if not state["seen_rounds"]:
                 raise ValueError("nothing to resume from")
-            meta = self.storage.round_meta(latest)
-            seen_rounds = [
-                e["round"]
-                for e in self.storage.committed_rounds()
-                if "seen" in e["tables"]
-            ]
-            if "frontier" not in meta["tables"]:
-                # crawl already complete; just return assembled tables
-                all_pages = self.storage.pages_glob(self.spark, latest)
-                return CrawlTables(
-                    pages=all_pages,
-                    seen=self._read_seen(seen_rounds),
-                    round_counters=[],
-                )
-            rnd = latest + 1
-            frontier = self._read_frontier(rnd)
-            # bloom catch-up on resume happens lazily below, once
-            # seen_total is known (same gating as the in-loop path)
         else:
             if seeds is None:
                 raise ValueError("seeds required when not resuming")
@@ -212,10 +243,20 @@ class CrawlEngine:
             # early kill and a subsequent resume would silently merge
             # the two crawls' seen sets and pages
             self.storage.reset()
-            rnd = 0
-            seen_rounds = []
-            self._write_frontier(self._initial_frontier(seeds), 0)
-            frontier = self._read_frontier(0)
+            state = self._carried_state()
+            state.update(self._write_frontier(self._initial_frontier(seeds), 0))
+        rnd = state["round"]
+        seen_rounds = state["seen_rounds"]
+        # running count of the seen union, used only to pick the seen
+        # anti-join's physical strategy (broadcast vs hash-build)
+        seen_total = state["seen_total"]
+        # total discovery_seq values handed out before the PREVIOUS round's
+        # expansion — frontier rows with seq >= prev_base are this round's
+        # new arrivals (the whole frontier in non-deferral mode)
+        prev_base = state["seq_base"]
+        vclock = float(state["vclock_next"])
+        # size and seq range of the frontier this round fetches
+        nxt = {k: state[k] for k in _NO_FRONTIER}
 
         deferral = cfg.budget_rounds is not None
         # R-disabled mirror of the reference's `rate_limiting_enabled`
@@ -245,42 +286,12 @@ class CrawlEngine:
                 F.max("crawl_delay_s").alias("d"),
             ).collect()[0]
             vgap = max(vgap, float(row["w"] or 0), float(row["d"] or 0))
-        # running count of the seen union, used only to pick the seen
-        # anti-join's physical strategy (broadcast vs hash-build). On
-        # resume a parquet count is footer-metadata only — no scan.
-        seen_total = (
-            self._read_seen(seen_rounds).count() if seen_rounds else 0
-        )
-        # total discovery_seq values handed out before the PREVIOUS round's
-        # expansion — frontier rows with seq >= prev_base are this round's
-        # new arrivals (the whole frontier in non-deferral mode)
-        if resume and rnd > 0:
-            # exact values persisted in the last committed round's
-            # counters; the frontier-max fallback (pre-persistence
-            # checkpoints) under-reconstructs when a round's expansion
-            # produced no survivors while a deferred backlog remained
-            prev_counters = (self.storage.round_meta(rnd - 1) or {}).get(
-                "counters", {})
-            prev_base = prev_counters.get("seq_base")
-            if prev_base is None:
-                prev = self.storage.read_table(self.spark, "frontier", rnd - 1)
-                prev_base = int(
-                    prev.agg(F.max("discovery_seq")).collect()[0][0]) + 1
-            vclock = float(prev_counters.get("vclock_next",
-                                             cfg.round_epoch))
-        else:
-            prev_base = 0
-            vclock = float(cfg.round_epoch)
 
-        while rnd < self.max_rounds:
-            agg = frontier.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max("discovery_seq").alias("mx"),
-                F.min("discovery_seq").alias("mn"),
-            ).collect()[0]
-            n_frontier = int(agg["n"])
-            if n_frontier == 0:
-                break
+        # an observed-empty next frontier ends the crawl at the commit of
+        # the round that wrote it
+        while rnd < self.max_rounds and nxt["next_frontier"] > 0:
+            frontier = self._read_frontier(rnd)
+            n_frontier = nxt["next_frontier"]
             # next fresh discovery_seq — MONOTONE across rounds: when a
             # round's expansion yields no survivors while a deferred
             # backlog remains, the frontier max regresses below already-
@@ -288,8 +299,8 @@ class CrawlEngine:
             # reissue seqs carried by pages fetched earlier (duplicate
             # (depth, seq) order keys). prev_base is the running
             # high-water mark, persisted per round for resume.
-            seq_base = max(int(agg["mx"]) + 1, prev_base)
-            seq_min = int(agg["mn"])
+            seq_base = max(nxt["next_seq_max"] + 1, prev_base)
+            seq_min = nxt["next_seq_min"]
             depth_of_round = rnd  # == frontier depth in non-deferral mode
 
             # each round consumes budget_rounds politeness windows per
@@ -404,8 +415,8 @@ class CrawlEngine:
                 expand = cfg.follow_links and (
                     cfg.max_depth == 0 or depth_of_round < cfg.max_depth
                 )
-            wrote_frontier = False
-            frontier_parts = []
+            # deferred rows carry over; surviving candidates join them
+            next_frontier = deferred.select(FRONTIER_COLS) if deferral else None
             if expand:
                 success = pages.filter(~F.col("is_error"))
                 if deferral and cfg.max_depth > 0:
@@ -468,39 +479,33 @@ class CrawlEngine:
                     "discovery_seq", F.col("discovery_seq") + F.lit(seq_base)
                 )
                 # recompute host only for rows that survived dedup +
-                # seen filtering (deferred rows below kept theirs)
+                # seen filtering (deferred rows kept theirs)
                 cand = host_frame(cand, "url")
-                frontier_parts.append(cand.select(FRONTIER_COLS))
-            if deferral:
-                frontier_parts.append(deferred.select(FRONTIER_COLS))
-            if frontier_parts:
-                next_frontier = frontier_parts[0]
-                for part in frontier_parts[1:]:
-                    next_frontier = next_frontier.unionByName(part)
-                self._write_frontier(next_frontier, rnd + 1)
-                wrote_frontier = True
+                cand = cand.select(FRONTIER_COLS)
+                next_frontier = (cand if next_frontier is None
+                                 else cand.unionByName(next_frontier))
+            nxt = (self._write_frontier(next_frontier, rnd + 1)
+                   if next_frontier is not None else dict(_NO_FRONTIER))
 
             round_counters = {
                 "frontier": n_frontier,
                 "depth": depth_of_round,
-                # persisted for exact resume: the seq high-water mark
-                # and the virtual clock cannot be re-derived from the
-                # frontier alone in every shape (see seq_base above)
+                # the state the next round reads back (_carried_state):
+                # the seq high-water mark, the virtual clock and the
+                # next frontier's size and seq range
                 "seq_base": seq_base,
                 "vclock_next": vclock,
+                **nxt,
                 **observed,
             }
             self.storage.commit_round(
                 rnd,
-                ["pages", "seen"] + (["frontier"] if wrote_frontier else []),
+                ["pages", "seen"]
+                + (["frontier"] if next_frontier is not None else []),
                 round_counters,
             )
             counters.append({"round": rnd, **round_counters})
-
             prev_base = seq_base
-            if not wrote_frontier:
-                break
-            frontier = self._read_frontier(rnd + 1)
             rnd += 1
 
         latest = self.storage.latest_round()

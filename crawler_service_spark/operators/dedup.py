@@ -242,11 +242,12 @@ class ShardedBloomFilter:
         )
 
     def _materialize(self, words: DataFrame) -> DataFrame:
-        old = self.words
-        words = words.persist()
-        words.count()  # materialize: ≤ num_bits/64 rows; breaks lineage
-        if old is not None:
-            old.unpersist()
+        # eager local checkpoint (≤ num_bits/64 rows in the block
+        # manager): its plan is a scan of those rows, so the next
+        # update's merge does not carry every earlier delta's lineage.
+        # persist() + count() caches the rows but keeps the plan, which
+        # then grows with every update.
+        words = words.localCheckpoint(eager=True)
         if self._word_arrays is not None:  # filter contents changed
             self._word_arrays.unpersist()
             self._word_arrays = None

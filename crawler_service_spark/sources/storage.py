@@ -27,7 +27,7 @@ import os
 import re
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -157,7 +157,8 @@ class SnapshotStore:
     def write_table_bucketed(
         self, df: DataFrame, table: str, rnd: int,
         buckets: int, cols: list[str], sort_cols: list[str],
-    ) -> str:
+        metrics: list[Column] | None = None,
+    ) -> dict:
         """Snapshot whose LAYOUT carries the next round's scheduling
         work: one payload exchange (repartition on the bucket key) feeds
         a sorted write producing exactly one file per bucket
@@ -176,13 +177,20 @@ class SnapshotStore:
         saveAsTable bucketed-write path re-sorts by (bucketId,
         sort_cols…) and pays catalog round-trips per round; measured
         c4 29.2→20.4 s / c16 8.2→6.2 s on the 21M-row bench snapshot
-        (r03 in-JVM A/B)."""
+        (r03 in-JVM A/B).
+
+        ``metrics`` (aggregate columns) are observed on the written rows
+        and returned as a dict (``{}`` without ``metrics``). They are
+        observed AFTER the exchange: an observation below it vanishes
+        when adaptive execution proves the input empty at runtime."""
         spark = df.sparkSession
         name = self._bucket_table_name(table, rnd)
         path = self._table_path(table, rnd)
-        (df.repartition(buckets, *[F.col(c) for c in cols])
-         .sortWithinPartitions(*sort_cols)
-         .write.mode("overwrite").parquet(path))
+        out = df.repartition(buckets, *[F.col(c) for c in cols])
+        if metrics:
+            obs = Observation()
+            out = out.observe(obs, *metrics)
+        out.sortWithinPartitions(*sort_cols).write.mode("overwrite").parquet(path)
         self._bucketize_files(path, buckets)
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         spark.sql(
@@ -198,9 +206,8 @@ class SnapshotStore:
         # is the table's partition spec riding its metadata)
         spec = {"buckets": buckets, "cols": list(cols),
                 "sort_cols": list(sort_cols)}
-        (Path(self._table_path(table, rnd)) / "_bucket_spec.json").write_text(
-            json.dumps(spec))
-        return self._table_path(table, rnd)
+        (Path(path) / "_bucket_spec.json").write_text(json.dumps(spec))
+        return dict(obs.get) if metrics else {}
 
     def read_table_bucketed(
         self, spark: SparkSession, table: str, rnd: int,

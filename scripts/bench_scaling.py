@@ -37,6 +37,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import subprocess
 import sys
 import time
@@ -72,7 +73,8 @@ def wait_for_quiet(max_load: float, timeout_s: int = 900) -> float:
 
 def read_cpu_stat() -> tuple[int, int]:
     """(steal_jiffies, total_jiffies) from /proc/stat."""
-    parts = open("/proc/stat").readline().split()
+    with open("/proc/stat") as f:
+        parts = f.readline().split()
     vals = [int(x) for x in parts[1:]]
     steal = vals[7] if len(vals) > 7 else 0
     return steal, sum(vals)
@@ -229,7 +231,8 @@ def run_once(job: str, cpus: int, n_urls: int,
 def load_history() -> list[dict]:
     path = os.path.join(REPO, "BENCH", "history.json")
     if os.path.exists(path):
-        hist = json.loads(open(path).read())
+        with open(path) as f:
+            hist = json.load(f)
         for r in hist:          # records predate the job field → schedule
             r.setdefault("job", "schedule")
         return hist
@@ -351,6 +354,20 @@ def paired_efficiency(history: list[dict], job: str, n_urls: int,
             "best": round(effs[-1], 3)}
 
 
+# a hand-written block at the end of the report (post-campaign analysis
+# that must not be lost) starts with this line and survives regeneration
+# verbatim
+ADDENDUM_SENTINEL = (
+    "<!-- ADDENDUM: preserved verbatim by scripts/bench_scaling.py report")
+
+
+def split_addendum(report: str) -> tuple[str, str]:
+    """(body, addendum) of a report: the addendum starts at the first
+    line that begins with ``ADDENDUM_SENTINEL``; ``""`` when none does."""
+    m = re.search(f"^{re.escape(ADDENDUM_SENTINEL)}", report, re.MULTILINE)
+    return (report, "") if m is None else (report[:m.start()], report[m.start():])
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n-urls", type=int, default=None,
@@ -432,15 +449,12 @@ scaling efficiency {eff:.3f}** (best-vs-best: {best_speedup:.2f}×, {best_eff:.3
 """)
 
     path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    # a hand-written "<!-- ADDENDUM" block at the end of the report
-    # (post-campaign analysis that must not be lost) survives
-    # regeneration verbatim
     addendum = ""
     if os.path.exists(path):
-        prev = open(path).read()
-        idx = prev.find("<!-- ADDENDUM")
-        if idx != -1:
-            addendum = "\n" + prev[idx:]
+        with open(path) as f:
+            addendum = split_addendum(f.read())[1]
+        if addendum:
+            addendum = "\n" + addendum
     with open(path, "w") as f:
         f.write(f"""# BENCH — two-parallelism scaling evidence (north rule)
 

@@ -120,3 +120,29 @@ def test_layout_checkpoint_dir_with_apostrophe(spark, tmp_path):
     t = _crawl(spark, tmp_path, "bob's crawl")
     assert fetch_order(t.pages).count() > 0
     assert "_salt" not in t.pages.columns
+
+
+def test_bucketed_write_observes_runtime_empty_input(spark, tmp_path):
+    """The frontier write's observed count/min/max — the next round's
+    counters — must arrive even when adaptive execution finds the input
+    empty at runtime (an anti-join that removes every row), the shape
+    of a crawl's last expansion."""
+    from pyspark.sql import functions as F
+
+    from crawler_service_spark.sources.storage import SnapshotStore
+
+    rows = spark.range(40).select(
+        (F.col("id") % 4).cast("string").alias("host"),
+        (F.col("id") % 2).alias("_salt"), F.col("id").alias("seq"))
+    metrics = [F.count(F.lit(1)).alias("n"), F.min("seq").alias("mn"),
+               F.max("seq").alias("mx")]
+    store = SnapshotStore(str(tmp_path))
+    got = store.write_table_bucketed(
+        rows, "t", 0, 4, ["host", "_salt"], ["host", "seq"], metrics=metrics)
+    assert got == {"n": 40, "mn": 0, "mx": 39}
+    empty = rows.join(rows.select("seq"), "seq", "left_anti")
+    got = store.write_table_bucketed(
+        empty, "t", 1, 4, ["host", "_salt"], ["host", "seq"], metrics=metrics)
+    assert got == {"n": 0, "mn": None, "mx": None}
+    assert store.write_table_bucketed(
+        rows, "t", 2, 4, ["host", "_salt"], ["host", "seq"]) == {}

@@ -57,6 +57,20 @@ def test_incremental_update_matches_refit(spark):
         assert k in flagged
 
 
+def test_update_does_not_grow_plan(spark):
+    """Each fit/update cuts the word table's lineage: a long crawl's
+    per-round updates must not stack every earlier delta into the plan."""
+    def plan_chars(sb):
+        return len(sb.words._jdf.queryExecution().logical().toString())
+
+    sb = ShardedBloomFilter(spark, num_bits=1 << 16, n_shards=8)
+    sb.fit(keys(spark, 0, 1000), "canon_url")
+    after_fit = plan_chars(sb)
+    for i in range(1, 5):
+        sb.update(keys(spark, i * 1000, (i + 1) * 1000), "canon_url")
+    assert plan_chars(sb) <= 1.2 * after_fit, (after_fit, plan_chars(sb))
+
+
 def test_unfitted_and_missing_shards(spark):
     sb = ShardedBloomFilter(spark, num_bits=1 << 12, n_shards=4)
     batch = keys(spark, 0, 100)
